@@ -56,7 +56,9 @@ def build_parser() -> argparse.ArgumentParser:
 
     sp = sub.add_parser("juice", help="run a juice (reduce) exe over a keyed dataset")
     sp.add_argument("exe")
-    sp.add_argument("num_juices", type=int)
+    sp.add_argument("num_juices", type=int,
+                    help="reducer count, honoured exactly; 0 lets AQE size the "
+                         "reducers from the shuffle bytes (module:function exes only)")
     sp.add_argument("src_name")
     sp.add_argument("out_name")
     sp.add_argument("--schema", default="key string, value string")

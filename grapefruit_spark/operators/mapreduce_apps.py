@@ -9,6 +9,10 @@ else is declarative.
 
 from __future__ import annotations
 
+import os
+import sys
+import tempfile
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +69,27 @@ GROUP BY word
 """
 
 
+def write_script(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` atomically (temp file in the same
+    directory, then ``os.replace``), skipping the write when the file
+    already holds it: sessions sharing the script directory never pipe
+    through a half-written script."""
+    try:
+        with open(path) as f:
+            if f.read() == text:
+                return
+    except OSError:
+        pass
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+
+
 def mj_exe_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WordCount through the reference's ARBITRARY-EXECUTABLE contract:
     ``maple <exe>`` / ``juice <exe>`` run real external programs speaking
@@ -74,36 +99,32 @@ def mj_exe_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     mj_wordcount's oracle: the exe path must produce value-identical
     counts to both the declarative path and DuckDB.
     """
-    import os
-    import sys
-    import tempfile
-
     from ..maplejuice import juice_pipe, maple_pipe
 
     d = os.path.join(tempfile.gettempdir(), "grapefruit_mj_exe")
     os.makedirs(d, exist_ok=True)
     mapper, reducer = os.path.join(d, "wc_maple.py"), os.path.join(d, "wc_juice.py")
-    with open(mapper, "w") as f:
-        f.write(
-            "import sys\n"
-            "for line in sys.stdin:\n"
-            "    for w in line.lower().split():\n"
-            "        print(f'{w}\\t1')\n"
-        )
-    with open(reducer, "w") as f:
-        f.write(
-            "import sys\n"
-            "cur, acc = None, 0\n"
-            "def flush():\n"
-            "    if cur is not None:\n"
-            "        print(f'{cur}\\t{acc}')\n"
-            "for line in sys.stdin:\n"
-            "    k, v = line.rstrip('\\n').split('\\t', 1)\n"
-            "    if k != cur:\n"
-            "        flush(); cur, acc = k, 0\n"
-            "    acc += int(v)\n"
-            "flush()\n"
-        )
+    write_script(
+        mapper,
+        "import sys\n"
+        "for line in sys.stdin:\n"
+        "    for w in line.lower().split():\n"
+        "        print(f'{w}\\t1')\n",
+    )
+    write_script(
+        reducer,
+        "import sys\n"
+        "cur, acc = None, 0\n"
+        "def flush():\n"
+        "    if cur is not None:\n"
+        "        print(f'{cur}\\t{acc}')\n"
+        "for line in sys.stdin:\n"
+        "    k, v = line.rstrip('\\n').split('\\t', 1)\n"
+        "    if k != cur:\n"
+        "        flush(); cur, acc = k, 0\n"
+        "    acc += int(v)\n"
+        "flush()\n",
+    )
     # r14: catalog.spread — otherwise ONE external pipe process maps the
     # whole corpus (the reference always passes num_maples > 1)
     docs = spread(table(spark, sf_dir, "documents").select("text"))

@@ -1519,6 +1519,9 @@ LOGIT_FUSED_MAX_DOCS = 8_000
 LOGIT_P_SCALE = 10**12
 #: z normalizer: codes are on the 1024 grid, weights on the 10¹² grid
 LOGIT_Z_DEN = QC_SCALE * LOGIT_P_SCALE
+# the int64 gradient bound above, enforced: the three constants cannot
+# drift out of the exact region independently
+assert QC_SCALE * LOGIT_P_SCALE * LOGIT_FUSED_MAX_DOCS < 2**63
 
 
 def _trunc_div(a: int, b: int) -> int:

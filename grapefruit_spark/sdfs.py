@@ -16,6 +16,9 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+#: suffixes of the write-beside directories put/merge/compact stage in
+_STAGING = ("__putting", "__merging", "__compacting", "__retired")
+
 
 class Sdfs:
     """Flat name → parquet-dataset namespace rooted at ``warehouse``."""
@@ -30,17 +33,28 @@ class Sdfs:
             raise ValueError(f"invalid sdfs name: {name!r}")
         return os.path.join(self.warehouse, name)
 
+    def _swap_in(self, name: str, tmp: str) -> None:
+        """Replace dataset ``name`` with the freshly written ``tmp`` by two
+        renames, not rmtree-then-rename: the path is absent only for the
+        instant between the renames, and a crash there leaves the old
+        generation recoverable at ``<name>__retired``."""
+        final, old = self._path(name), self._path(f"{name}__retired")
+        if os.path.isdir(old):
+            shutil.rmtree(old)
+        os.rename(final, old)
+        os.rename(tmp, final)
+        shutil.rmtree(old)
+
     # -- file ops (SdfsServer.java put/get/delete) ----------------------
     def put(self, df: DataFrame, name: str, mode: str = "overwrite",
             partition_by: list[str] | None = None) -> None:
         """Insert/update a dataset (reference: ``put local sdfsname``).
 
-        An overwrite of an EXISTING dataset writes beside and swaps via
-        two renames, so (a) the path is absent only for the instant
-        between the two renames (vs the whole rmtree+rewrite window of a
-        naive overwrite; a crash there leaves the data recoverable at
-        ``<name>__retired`` — a truly gapless swap needs a symlink flip
-        or versioned directories) and (b) a ``df`` derived from this same
+        An overwrite of an EXISTING dataset writes beside and swaps in
+        (``_swap_in``), so (a) the path is absent only for the instant
+        between two renames, not the whole rmtree+rewrite window of a
+        naive overwrite (a truly gapless swap needs a symlink flip or
+        versioned directories), and (b) a ``df`` derived from this same
         dataset can't be clobbered mid-plan by Spark's delete-then-write
         overwrite."""
         final = self._path(name)
@@ -50,12 +64,7 @@ class Sdfs:
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(tmp)
-            old = self._path(f"{name}__retired")
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            os.rename(final, old)
-            os.rename(tmp, final)
-            shutil.rmtree(old)
+            self._swap_in(name, tmp)
             return
         writer = df.write.mode(mode)
         if partition_by:
@@ -92,10 +101,13 @@ class Sdfs:
         )
 
     def store(self) -> list[str]:
-        """All dataset names in this warehouse (reference ``store``)."""
+        """All dataset names in this warehouse (reference ``store``).
+        Staging directories an interrupted put/merge/compact left behind
+        are not datasets and stay hidden."""
         return sorted(
             d for d in os.listdir(self.warehouse)
             if os.path.isdir(os.path.join(self.warehouse, d))
+            and not d.endswith(_STAGING)
         )
 
     def global_(self) -> dict[str, int]:
@@ -118,9 +130,7 @@ class Sdfs:
         df = self.get(name)
         tmp = self._path(f"{name}__compacting")
         df.repartition(target_files).write.mode("overwrite").parquet(tmp)
-        final = self._path(name)
-        shutil.rmtree(final)
-        os.rename(tmp, final)
+        self._swap_in(name, tmp)
         return len(self.ls(name))
 
     def auto_compact(self, max_files: int = 16, target_files: int = 4) -> dict[str, int]:
@@ -160,12 +170,4 @@ class Sdfs:
         merged = survivors.unionByName(updates)
         tmp = self._path(f"{name}__merging")
         merged.write.mode("overwrite").parquet(tmp)
-        final = self._path(name)
-        # two renames, not rmtree-then-rename: the table path is never
-        # ABSENT — a reader either sees the old generation or the new one
-        old = self._path(f"{name}__retired")
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(final, old)
-        os.rename(tmp, final)
-        shutil.rmtree(old)
+        self._swap_in(name, tmp)

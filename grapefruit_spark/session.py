@@ -4,7 +4,9 @@ The reference (MapleJuice) hand-schedules tasks over VMs
 (/root/reference/src/main/java/edu/cs425/mp3/MapleJuice.java); here the
 equivalent knobs are Spark confs: AQE for runtime re-planning (the
 reference's re-scheduling on failure), shuffle partition sizing (its
-``num_maples``/``num_juices``), and Arrow for the Python escape hatches.
+``num_maples``/``num_juices``: a juice given no ``num_juices`` lets AQE
+size its reducers, up to ``spark.sql.shuffle.partitions``), and Arrow for
+the Python escape hatches.
 """
 
 from __future__ import annotations

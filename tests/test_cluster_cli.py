@@ -92,3 +92,22 @@ def test_cli_sim_matches_wordcount_oracle(spark, duck):
     from .util import assert_matches_oracle
 
     assert_matches_oracle(cli_sim(spark, SF_DIR), duck, ORACLE["cli_sim"])
+
+
+def test_cli_juice_num_juices(spark, tmp_path):
+    """`juice <exe> <num_juices>` runs exactly that many reducers (one
+    output part file each); 0 lets AQE size the reducers."""
+    from grapefruit_spark.sdfs import Sdfs
+
+    wh = str(tmp_path / "wh")
+    fs = Sdfs(spark, wh)
+    fs.put(spark.range(2000).selectExpr("cast(id % 48 as string) as key",
+                                        "cast(1 as int) as value"), "kv")
+    exe = "grapefruit_spark.operators.mapreduce_apps:cli_wc_juice"
+    schema = ["--schema", "word string, cnt bigint"]
+    assert cli.main(["--warehouse", wh, "juice", exe, "3", "kv", "exact", *schema]) == 0
+    assert len(fs.ls("exact")) == 3
+    assert cli.main(["--warehouse", wh, "juice", exe, "0", "kv", "adaptive", *schema]) == 0
+    assert len(fs.ls("adaptive")) <= spark.sparkContext.defaultParallelism
+    for name in ("exact", "adaptive"):
+        assert fs.get(name).groupBy().sum("cnt").first()[0] == 2000

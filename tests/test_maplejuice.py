@@ -258,3 +258,149 @@ def test_sdfs_merge_empty_updates_is_noop(spark, tmp_path):
     fs.put(base, "t")
     fs.merge("t", base.where("k < 0"), ["k"])  # empty update set
     assert {(r["k"], r["v"]) for r in fs.get("t").collect()} == {(1, 10.0)}
+
+
+def _keyed(spark, n_keys: int = 48, rows: int = 2000):
+    return spark.range(rows).selectExpr(
+        f"cast(id % {n_keys} as string) as key", "id as value"
+    )
+
+
+def _count_juice(key, grp):
+    return pd.DataFrame({"key": [key], "n": [len(grp)]})
+
+
+@pytest.mark.parametrize("shuffle", ["hash", "range"])
+def test_juice_explicit_num_juices_is_exact(spark, shuffle):
+    """An explicit num_juices is the reference CLI's reducer count: AQE
+    must not coalesce it, on either placement."""
+    out = juice(_keyed(spark), _count_juice, "key string, n bigint",
+                num_juices=7, shuffle=shuffle)
+    assert out.rdd.getNumPartitions() == 7
+    assert sum(r["n"] for r in out.collect()) == 2000
+
+
+@pytest.mark.parametrize("shuffle", ["hash", "range"])
+def test_juice_default_fan_out_is_adaptive(spark, shuffle):
+    """Without num_juices the reducers come from the shuffle bytes, not
+    the static spark.sql.shuffle.partitions."""
+    out = juice(_keyed(spark), _count_juice, "key string, n bigint", shuffle=shuffle)
+    rows = out.collect()
+    assert len(rows) == 48 and sum(r["n"] for r in rows) == 2000
+    static = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert out.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism < static
+
+
+def test_pipeline_default_juice_writes_few_files(spark, tmp_path):
+    """A materialized juice with no num_juices lands small input as at
+    most defaultParallelism part files, not one per static shuffle
+    partition (which fragmented the output and fed auto_compact)."""
+    fs = Sdfs(spark, str(tmp_path / "wh"))
+    fs.put(_keyed(spark), "kv")
+    out = (
+        MapleJuicePipeline(fs.get("kv"), fs, "kv")
+        .juice(_count_juice, "key string, n bigint", dest_name="counts")
+        .done()
+    )
+    assert {r["key"]: r["n"] for r in out.collect()} == {
+        str(k): len(range(k, 2000, 48)) for k in range(48)
+    }
+    assert 1 <= len(fs.ls("counts")) <= spark.sparkContext.defaultParallelism
+
+
+def _ragged_juice(key, grp):
+    """None, empty, multi-row and null-valued outputs, chosen by key."""
+    k = int(key)
+    if k % 5 == 0:
+        return None
+    if k % 5 == 1:
+        return pd.DataFrame({"key": [], "v": []})
+    if k % 5 == 2:
+        return pd.DataFrame({"key": [key] * 3, "v": [k, None, k + 1]})
+    if k % 5 == 3:
+        return pd.DataFrame({"key": [key], "v": [None]})
+    return pd.DataFrame({"key": [key], "v": [int(grp["value"].sum())]})
+
+
+def _ragged_expected():
+    want = []
+    for k in range(48):
+        key = str(k)
+        if k % 5 == 2:
+            want += [(key, k), (key, None), (key, k + 1)]
+        elif k % 5 == 3:
+            want.append((key, None))
+        elif k % 5 == 4:
+            want.append((key, sum(range(k, 2000, 48))))
+    return want
+
+
+@pytest.mark.parametrize("max_batch", ["10000", "2"])
+@pytest.mark.parametrize("num_juices", [None, 3])
+def test_juice_batched_output_keeps_rows(spark, max_batch, num_juices):
+    """Per-key outputs are concatenated into one batch per partition
+    (flushed early at maxRecordsPerBatch rows); None, empty frames,
+    multi-row frames and nulls must come out exactly as per-key yields
+    did."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, max_batch)
+    try:
+        out = juice(_keyed(spark), _ragged_juice, "key string, v bigint",
+                    num_juices=num_juices)
+        got = sorted(((r["key"], r["v"]) for r in out.collect()),
+                     key=lambda t: (t[0], t[1] is None, t[1] or 0))
+    finally:
+        spark.conf.set(conf, prev)
+    want = sorted(_ragged_expected(), key=lambda t: (t[0], t[1] is None, t[1] or 0))
+    assert got == want
+
+
+def test_sdfs_compact_clears_stale_retired(spark, tmp_path):
+    """compact swaps in by two renames like put/merge: a stale
+    ``__retired`` generation from a crash is replaced, and no staging
+    directory is left behind."""
+    import os
+
+    fs = Sdfs(spark, str(tmp_path / "wh"))
+    fs.put(spark.range(100).repartition(8), "t")
+    stale = os.path.join(fs.warehouse, "t__retired")
+    os.makedirs(stale)
+    open(os.path.join(stale, "part-00000.parquet"), "w").close()
+    assert fs.compact("t", 2) == 2
+    assert fs.get("t").count() == 100
+    assert sorted(os.listdir(fs.warehouse)) == ["t"]
+
+
+def test_sdfs_namespace_hides_staging_dirs(spark, tmp_path):
+    """Leftover put/merge/compact staging directories are not datasets:
+    store/global_ skip them, so auto_compact never rewrites one."""
+    import os
+
+    fs = Sdfs(spark, str(tmp_path / "wh"))
+    fs.put(spark.range(10).repartition(2), "t")
+    for suffix in ("__putting", "__merging", "__compacting", "__retired"):
+        spark.range(10).repartition(20).write.parquet(
+            os.path.join(fs.warehouse, f"t{suffix}")
+        )
+    assert fs.store() == ["t"]
+    assert set(fs.global_()) == {"t"}
+    assert fs.auto_compact(max_files=1, target_files=1) == {"t": 1}
+    assert os.path.isdir(os.path.join(fs.warehouse, "t__putting"))
+
+
+def test_write_script_atomic_and_idempotent(tmp_path):
+    """Exe scripts are swapped in whole and not rewritten when unchanged."""
+    import os
+
+    from grapefruit_spark.operators.mapreduce_apps import write_script
+
+    path = str(tmp_path / "s.py")
+    with open(path, "w") as f:
+        f.write("stale")
+    write_script(path, "print(1)\n")
+    assert open(path).read() == "print(1)\n"
+    before = os.stat(path).st_ino, os.stat(path).st_mtime_ns
+    write_script(path, "print(1)\n")
+    assert (os.stat(path).st_ino, os.stat(path).st_mtime_ns) == before
+    assert os.listdir(tmp_path) == ["s.py"]
