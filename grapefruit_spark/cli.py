@@ -58,7 +58,8 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("exe")
     sp.add_argument("num_juices", type=int,
                     help="reducer count, honoured exactly; 0 lets AQE size the "
-                         "reducers from the shuffle bytes (module:function exes only)")
+                         "reducers from the shuffle bytes (module:function exes "
+                         "only: an executable juice needs at least 1)")
     sp.add_argument("src_name")
     sp.add_argument("out_name")
     sp.add_argument("--schema", default="key string, value string")
@@ -127,18 +128,21 @@ def main(argv: list[str] | None = None) -> int:
         from .maplejuice import juice_pipe
 
         src = fs.get(args.src_name)
+        # the output lands in the namespace before the input is deleted
+        stage = dict(fs=fs, src_name=args.src_name, dest_name=args.out_name,
+                     delete_input=args.delete_input)
         if os.path.exists(args.exe.split()[0]):
             if args.shuffle == "range":
                 raise SystemExit("executable juice supports hash shuffle only")
-            out = juice_pipe(src, args.exe, num_juices=args.num_juices)
+            try:
+                juice_pipe(src, args.exe, num_juices=args.num_juices, **stage)
+            except ValueError as e:
+                raise SystemExit(f"executable juice: {e}") from e
         else:
-            out = juice(
+            juice(
                 src, _load_exe(args.exe), args.schema,
-                num_juices=args.num_juices, shuffle=args.shuffle,
+                num_juices=args.num_juices, shuffle=args.shuffle, **stage,
             )
-        fs.put(out, args.out_name)
-        if args.delete_input:
-            fs.delete(args.src_name)
     elif args.cmd == "demo":
         from .operators import all_queries
 

@@ -163,19 +163,9 @@ class MapleJuicePipeline:
         self.stage_name = stage_name
 
     def _next(self, out: DataFrame, dest_name: str | None, delete_input: bool):
-        if self.fs is not None and dest_name is not None:
-            # materialize BEFORE deleting the input: the reference deletes
-            # only after the juice output lands in SDFS, and so do we
-            self.fs.put(out, dest_name)
-            if delete_input and self.stage_name is not None:
-                self.fs.delete(self.stage_name)
-            return MapleJuicePipeline(self.fs.get(dest_name), self.fs, dest_name)
-        if delete_input:
-            raise ValueError(
-                "delete_input requires materialized mode (fs + dest_name): "
-                "a lazily composed stage has no stored input to delete"
-            )
-        return MapleJuicePipeline(out, self.fs)
+        out = _finish_juice(out, self.fs, self.stage_name, dest_name, delete_input)
+        stored = self.fs is not None and dest_name is not None
+        return MapleJuicePipeline(out, self.fs, dest_name if stored else None)
 
     def maple(self, fn: MapleFn, output_schema: str, num_maples: int | None = None,
               dest_name: str | None = None):
@@ -192,6 +182,17 @@ class MapleJuicePipeline:
 
 
 # ---------------------------------------------------------------- exe pipe
+def _kv_lines_frame(spark, lines) -> DataFrame:
+    """An RDD of ``key\\tvalue`` lines as a (key, value) string DataFrame;
+    lines without a tab are dropped."""
+    kv = (
+        lines.map(lambda ln: ln.split("\t", 1))
+        .filter(lambda p: len(p) == 2)
+        .map(lambda p: (p[0], p[1]))
+    )
+    return spark.createDataFrame(kv, "key string, value string")
+
+
 def maple_pipe(df: DataFrame, exe: str) -> DataFrame:
     """The reference's EXACT executable contract (``maple <exe>``,
     MapleJuice.java task loop): each input row is fed to ``exe`` as one
@@ -202,16 +203,10 @@ def maple_pipe(df: DataFrame, exe: str) -> DataFrame:
     process per partition, rows streamed through, output re-ingested as a
     (key, value) DataFrame for the juice shuffle.
     """
-    spark = df.sparkSession
     lines = df.rdd.map(
         lambda r: "\t".join("" if v is None else str(v) for v in r)
     ).pipe(exe)
-    kv = (
-        lines.map(lambda ln: ln.split("\t", 1))
-        .filter(lambda p: len(p) == 2)
-        .map(lambda p: (p[0], p[1]))
-    )
-    return spark.createDataFrame(kv, "key string, value string")
+    return _kv_lines_frame(df.sparkSession, lines)
 
 
 def juice_pipe(
@@ -227,11 +222,13 @@ def juice_pipe(
     hash-placed on ``num_juices`` reducers (Math.abs(hashCode) % N in the
     reference), sorted within each reducer, and streamed through ``exe``
     as sorted ``key\\tvalue`` lines — hadoop-streaming-identical, so any
-    streaming reducer binary runs unchanged.
+    streaming reducer binary runs unchanged. ``num_juices`` must be ≥ 1:
+    an RDD shuffle into 0 partitions yields no rows, not an error.
     """
     from pyspark.rdd import portable_hash
 
-    spark = kv.sparkSession
+    if num_juices < 1:
+        raise ValueError(f"num_juices must be >= 1, got {num_juices}")
     parted = (
         kv.rdd.map(lambda r: (str(r[0]), str(r[1])))
         .repartitionAndSortWithinPartitions(
@@ -242,10 +239,5 @@ def juice_pipe(
         )
     )
     out = parted.map(lambda p: f"{p[0]}\t{p[1]}").pipe(exe)
-    res = (
-        out.map(lambda ln: ln.split("\t", 1))
-        .filter(lambda p: len(p) == 2)
-        .map(lambda p: (p[0], p[1]))
-    )
-    reduced = spark.createDataFrame(res, "key string, value string")
+    reduced = _kv_lines_frame(kv.sparkSession, out)
     return _finish_juice(reduced, fs, src_name, dest_name, delete_input)

@@ -215,20 +215,7 @@ def condorcet_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Self-join of the ballot relation on orderkey gives every ordered pair
     exactly once (rk_a < rk_b); a single groupBy replaces the reference's
     intermediate-file shuffle.
-
-    The majority-reduced pair matrix is stage 1's OUTPUT FILE in the
-    reference (stage 2 reads it): it flows through the session memo as
-    "condorcet_pairs" when active (r14; builder row condorcet_pairs —
-    bit-identical, the memo only skips recomputation).
     """
-    from ._memo import memoized_frame
-
-    return memoized_frame(
-        spark, sf_dir, "condorcet_pairs", lambda: _condorcet_pairs_build(spark, sf_dir)
-    )
-
-
-def _condorcet_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = _ballots(spark, sf_dir)
     a = b.alias("a")
     c = b.alias("c")
@@ -290,13 +277,7 @@ def condorcet_winner(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SUBTREE is the full ballots shuffle, and the three consumers below
     # (cands, wins, n_cand) would otherwise each recompute it (measured
     # ~2× the stage-1 time at the 100 MB baseline scale without this).
-    # r14: with the session memo active it arrives already pinned
-    # (builder row: condorcet_pairs — the reference's stage-1 file)
-    from ._memo import memo_active
-
-    pairs = condorcet_pairs(spark, sf_dir)
-    if not memo_active("condorcet_pairs"):
-        pairs = pin(pairs)
+    pairs = pin(condorcet_pairs(spark, sf_dir))
     cands = pairs.select(F.col("cand_lo").alias("cand")).union(
         pairs.select(F.col("cand_hi").alias("cand"))
     ).distinct()

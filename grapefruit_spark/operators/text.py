@@ -1102,24 +1102,10 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     BPE's greedy semantics, one codegen'd expression per iteration.
     The vocabulary is restricted to purely-alphabetic words (^[a-z]+$
     after lowercasing) so the marker can never collide with a symbol.
-
-    The learned merge table honors the session memo
-    (GRAPEFRUIT_CLUSTER_MEMO=1, the classifier-fit pattern): under it
-    the BPE_MERGES distributed training iterations run once per corpus
-    snapshot and the encode/report row reuses the ≤8-row table. Values
-    bit-identical either way.
     """
     return spark.createDataFrame(
-        _bpe_merge_rows(spark, sf_dir),
+        _bpe_merge_rows_build(spark, sf_dir),
         schema="merge_idx int, pair string, n_pair bigint",
-    )
-
-
-def _bpe_merge_rows(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, int]]:
-    from ._memo import memoized_rows
-
-    return memoized_rows(
-        spark, sf_dir, "bpe_merges", lambda: _bpe_merge_rows_build(spark, sf_dir)
     )
 
 

@@ -16,8 +16,9 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: suffixes of the write-beside directories put/merge/compact stage in
-_STAGING = ("__putting", "__merging", "__compacting", "__retired")
+#: suffixes of the write-beside directories put/merge/compact (and the
+#: streaming rollup sink) stage in
+_STAGING = ("__putting", "__merging", "__compacting", "__delta", "__retired")
 
 
 class Sdfs:
@@ -29,7 +30,10 @@ class Sdfs:
         os.makedirs(warehouse, exist_ok=True)
 
     def _path(self, name: str) -> str:
-        if "/" in name or name.startswith("."):
+        """Directory of dataset ``name``. Empty names (the warehouse root
+        itself) and staging-suffixed names (hidden by ``store`` and
+        clobbered by ``_swap_in``) are rejected."""
+        if not name or "/" in name or name.startswith(".") or name.endswith(_STAGING):
             raise ValueError(f"invalid sdfs name: {name!r}")
         return os.path.join(self.warehouse, name)
 
@@ -38,7 +42,8 @@ class Sdfs:
         renames, not rmtree-then-rename: the path is absent only for the
         instant between the renames, and a crash there leaves the old
         generation recoverable at ``<name>__retired``."""
-        final, old = self._path(name), self._path(f"{name}__retired")
+        final = self._path(name)
+        old = final + "__retired"
         if os.path.isdir(old):
             shutil.rmtree(old)
         os.rename(final, old)
@@ -58,18 +63,14 @@ class Sdfs:
         dataset can't be clobbered mid-plan by Spark's delete-then-write
         overwrite."""
         final = self._path(name)
-        if mode == "overwrite" and os.path.isdir(final):
-            tmp = self._path(f"{name}__putting")
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(tmp)
-            self._swap_in(name, tmp)
-            return
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(final)
+        if mode == "overwrite" and os.path.isdir(final):
+            writer.parquet(final + "__putting")
+            self._swap_in(name, final + "__putting")
+        else:
+            writer.parquet(final)
 
     def get(self, name: str) -> DataFrame:
         """Fetch a dataset (reference: ``get sdfsname local``)."""
@@ -128,7 +129,7 @@ class Sdfs:
         slot, storage-layer concern.)
         """
         df = self.get(name)
-        tmp = self._path(f"{name}__compacting")
+        tmp = self._path(name) + "__compacting"
         df.repartition(target_files).write.mode("overwrite").parquet(tmp)
         self._swap_in(name, tmp)
         return len(self.ls(name))
@@ -168,6 +169,6 @@ class Sdfs:
         keys = updates.select(*key_cols).distinct()
         survivors = current.join(keys, key_cols, "left_anti")
         merged = survivors.unionByName(updates)
-        tmp = self._path(f"{name}__merging")
+        tmp = self._path(name) + "__merging"
         merged.write.mode("overwrite").parquet(tmp)
         self._swap_in(name, tmp)

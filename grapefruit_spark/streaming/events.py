@@ -524,7 +524,6 @@ def maintain_event_rollup(
     increments exactly-once across restarts.
     """
     import os
-    import shutil
 
     ev = _event_stream(
         spark, src_dir, "*.parquet", max_files_per_trigger=max_files_per_trigger
@@ -555,19 +554,12 @@ def maintain_event_rollup(
         merged = merged.withColumn(
             "sum_value", F.col("sum_value").cast("decimal(38,6)")
         )
-        # write beside, then two renames — the table path is never ABSENT
-        # (an rmtree-then-rename swap leaves a window where a reader finds
-        # no table at all)
-        tmp = fs._path(f"{name}__delta")
-        merged.write.mode("overwrite").parquet(tmp)
+        # write beside, then swap in by two renames (Sdfs._swap_in)
         final = fs._path(name)
+        tmp = final + "__delta"
+        merged.write.mode("overwrite").parquet(tmp)
         if os.path.isdir(final):
-            old = fs._path(f"{name}__retired")
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            os.rename(final, old)
-            os.rename(tmp, final)
-            shutil.rmtree(old)
+            fs._swap_in(name, tmp)
         else:
             os.rename(tmp, final)
 

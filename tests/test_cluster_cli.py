@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from grapefruit_spark import cli
 from grapefruit_spark.cluster import conf_dump, info, members
 
@@ -111,3 +113,36 @@ def test_cli_juice_num_juices(spark, tmp_path):
     assert len(fs.ls("adaptive")) <= spark.sparkContext.defaultParallelism
     for name in ("exact", "adaptive"):
         assert fs.get(name).groupBy().sum("cnt").first()[0] == 2000
+
+
+def test_cli_executable_juice_zero_reducers_keeps_input(spark, tmp_path):
+    """`juice <exe-file> 0 ... --delete-input` would shuffle into zero
+    reducers (no rows, no error), write an empty output and then delete
+    the input: the CLI exits non-zero before writing or deleting."""
+    import sys
+
+    from grapefruit_spark.sdfs import Sdfs
+
+    wh = str(tmp_path / "wh")
+    fs = Sdfs(spark, wh)
+    fs.put(spark.createDataFrame([("a", "1"), ("b", "2")], "key string, value string"), "kv")
+    reducer = tmp_path / "r.py"
+    reducer.write_text("import sys\nfor line in sys.stdin:\n    sys.stdout.write(line)\n")
+    argv = ["--warehouse", wh, "juice", f"{sys.executable} {reducer}", "0", "kv", "out",
+            "--delete-input"]
+    with pytest.raises(SystemExit, match="num_juices"):
+        cli.main(argv)
+    assert not fs.exists("out")
+    assert fs.get("kv").count() == 2
+
+
+def test_cli_delete_empty_name_keeps_warehouse(spark, tmp_path):
+    """`delete ""` named the warehouse root and removed every dataset."""
+    from grapefruit_spark.sdfs import Sdfs
+
+    wh = str(tmp_path / "wh")
+    fs = Sdfs(spark, wh)
+    fs.put(spark.range(3), "t")
+    with pytest.raises(ValueError, match="invalid sdfs name"):
+        cli.main(["--warehouse", wh, "delete", ""])
+    assert fs.get("t").count() == 3

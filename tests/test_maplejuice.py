@@ -389,6 +389,33 @@ def test_sdfs_namespace_hides_staging_dirs(spark, tmp_path):
     assert os.path.isdir(os.path.join(fs.warehouse, "t__putting"))
 
 
+@pytest.mark.parametrize("bad", ["", "x__retired", "x__putting", "x__delta"])
+def test_sdfs_rejects_empty_and_staging_names(spark, tmp_path, bad):
+    """An empty name is the warehouse root itself, and a staging-suffixed
+    name is hidden by store() and clobbered by the next swap of its base
+    dataset: put and delete refuse both before touching the disk."""
+    fs = Sdfs(spark, str(tmp_path / "wh"))
+    fs.put(spark.range(3), "keep")
+    with pytest.raises(ValueError, match="invalid sdfs name"):
+        fs.put(spark.range(3), bad)
+    with pytest.raises(ValueError, match="invalid sdfs name"):
+        fs.delete(bad)
+    assert fs.store() == ["keep"]
+    assert fs.get("keep").count() == 3
+
+
+def test_juice_pipe_rejects_zero_reducers(spark):
+    """A shuffle into 0 partitions returns no rows instead of failing, so
+    juice_pipe refuses num_juices < 1 up front."""
+    import sys
+
+    from grapefruit_spark.maplejuice import juice_pipe
+
+    kv = spark.createDataFrame([("a", "1")], "key string, value string")
+    with pytest.raises(ValueError, match="num_juices"):
+        juice_pipe(kv, f"{sys.executable} -c pass", num_juices=0)
+
+
 def test_write_script_atomic_and_idempotent(tmp_path):
     """Exe scripts are swapped in whole and not rewritten when unchanged."""
     import os
